@@ -23,6 +23,7 @@ from pyspark.sql import types as T
 
 from db_spark.ops import Q, SortDirection
 from db_spark.conditions import col, val, Query
+from db_spark.execution import barrier, spread_scan
 from db_spark.functions import ascii_lower, money_sum, decimal_sum, truthy
 
 
@@ -30,39 +31,6 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     from db_spark.sources import read_table
 
     return read_table(spark, sf_dir, name)
-
-
-def _spread(spark: SparkSession, df: DataFrame) -> DataFrame:
-    """Spread LIGHTWEIGHT key rows across every core before expensive
-    per-row Python work attaches (guide §8: shuffle the proxy, never
-    the payload). Only fires when the scan's file count is below the
-    cluster's defaultParallelism — the testdata tables are 1-10
-    single-row-group files, so a per-row decode stage otherwise runs
-    on 1-10 tasks of a 32-core executor. At scale a table has more
-    splits than cores and this is a NO-OP (a repartition there would
-    REDUCE parallelism). Round-robin repartition is retry-safe
-    (sort-before-repartition is on by default) and the downstream
-    per-row decodes are partition-order-independent, so results are
-    unchanged."""
-    par = spark.sparkContext.defaultParallelism
-    files = df.inputFiles()
-    # inputFiles() is best-effort: non-file-scan plans return [] — treat
-    # that as "unknown parallelism", not "one file", and leave df alone.
-    if 0 < len(files) < par:
-        return df.repartition(par)
-    return df
-
-
-def _lspread(df: DataFrame, *cols) -> DataFrame:
-    """text.spread_scan at the query site: spread a tiny doc scan
-    across cores BEFORE a tokenizer regex + explode feeds a sketch
-    aggregate (r13, guide §2.6) — the regex otherwise runs on the scan's
-    1-2 tasks. Gated exactly like every spread: no-op at scale, no-op on
-    plans that already shuffle. Pass a high-cardinality deterministic
-    key column to skip round-robin's sort-before-repartition pass."""
-    from db_spark.llm.text import spread_scan
-
-    return spread_scan(df, *cols)
 
 
 # ---------------------------------------------------------------------------
@@ -1536,10 +1504,8 @@ def q_triangle_count(spark, sf_dir):
     edges(b,c) forms wedges, closed by a semi-check against edges(a,c)
     — never an all-pairs product; at scale the wedge join is the
     degree-squared term the >= 2 support threshold bounds."""
-    from db_spark.llm.dedup import _plan_cache
-
     li = _t(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
-    # in-array pair generation (see q_copurchase_pairs) + a plan cache
+    # in-array pair generation (see q_copurchase_pairs) + a barrier
     # on the edge table: the wedge/closure joins read edges THREE ways
     # and each consumer re-ran the whole basket self-join subtree
     # (r13; sf0.1 noop 2.2 -> 0.2 s, identical n_triangles).
@@ -1551,7 +1517,7 @@ def q_triangle_count(spark, sf_dir):
             F.transform("_ps", lambda y: F.when(
                 x < y, F.struct(x.alias("pa"), y.alias("pb")))),
             lambda s: s.isNotNull())))
-    edges = _plan_cache(
+    edges = barrier(
         basket.select(F.explode(pairs).alias("_p"))
         .select("_p.pa", "_p.pb")
         .groupBy("pa", "pb")
@@ -2787,7 +2753,8 @@ def q_simhash(spark, sf_dir):
     # the one text shuffle it costs, and the gate makes it a no-op at
     # scale. A/B sf0.1: 1.27 -> 0.30 s, identical rows.
     return stage_expr(
-        _lspread(docs, "doc_id"), ["doc_id"], ldedup.simhash(F.col("text")), "simhash"
+        spread_scan(docs, "doc_id"), ["doc_id"],
+        ldedup.simhash(F.col("text")), "simhash"
     ).filter(F.col("simhash").isNotNull())
 
 
@@ -3876,7 +3843,7 @@ def q_video_features(spark, sf_dir):
         payload.alias("payload"),
         F.lit(None).cast(lmm.MEDIA_SCHEMA["meta"].dataType).alias("meta"),
     )
-    # deliberately NOT _spread: the y4m parse is ~µs per 100-byte
+    # deliberately NOT spread_scan: the y4m parse is ~µs per 100-byte
     # payload, so the extra exchange costs what the parallelism buys
     # back (A/B r12: 0.81-0.95 s both ways at sf0.1) — contrast
     # q_mjpeg_features, whose Huffman+IDCT decode is expensive enough
@@ -4016,7 +3983,7 @@ def q_kmv_distinct(spark, sf_dir):
     from db_spark.llm import text as ltext
 
     docs = _t(spark, sf_dir, "documents")
-    tok = _lspread(docs, "doc_id").select(
+    tok = spread_scan(docs, "doc_id").select(
         "source",
         F.explode(ltext.tokens(ascii_lower(F.col("text")))).alias("_tk"))
     sk = lsk.kmv_sketch(tok, F.col("_tk"), k=64, group_cols=["source"])
@@ -4038,7 +4005,7 @@ def q_kmv_merge(spark, sf_dir):
     from db_spark.llm import text as ltext
 
     docs = _t(spark, sf_dir, "documents")
-    tok = _lspread(docs, "doc_id").select(
+    tok = spread_scan(docs, "doc_id").select(
         "source", "doc_id",
         F.explode(ltext.tokens(ascii_lower(F.col("text")))).alias("_tk"))
     sa = lsk.kmv_sketch(tok.filter(F.col("doc_id") % 2 == 0),
@@ -4102,7 +4069,7 @@ def q_hll_distinct(spark, sf_dir):
     from db_spark.llm import text as ltext
 
     docs = _t(spark, sf_dir, "documents")
-    tok = _lspread(docs, "doc_id").select(
+    tok = spread_scan(docs, "doc_id").select(
         "source",
         F.explode(ltext.tokens(ascii_lower(F.col("text")))).alias("_tk"))
     sk = lsk.hll_sketch(tok, F.col("_tk"), p=8, group_cols=["source"])
@@ -4122,7 +4089,7 @@ def q_hll_merge(spark, sf_dir):
     from db_spark.llm import text as ltext
 
     docs = _t(spark, sf_dir, "documents")
-    tok = _lspread(docs, "doc_id").select(
+    tok = spread_scan(docs, "doc_id").select(
         "source", "doc_id",
         F.explode(ltext.tokens(ascii_lower(F.col("text")))).alias("_tk"))
     sa = lsk.hll_sketch(tok.filter(F.col("doc_id") % 2 == 0),
@@ -4149,7 +4116,7 @@ def q_hll_set_ops(spark, sf_dir):
     from db_spark.llm import text as ltext
 
     docs = _t(spark, sf_dir, "documents")
-    tok = _lspread(docs, "doc_id").select(
+    tok = spread_scan(docs, "doc_id").select(
         "source", "doc_id",
         F.explode(ltext.tokens(ascii_lower(F.col("text")))).alias("_tk"))
     half = (F.col("doc_id") - F.col("doc_id") % 20) / 20 % 2
@@ -4204,7 +4171,7 @@ def q_cm_heavy_hitters(spark, sf_dir):
     from db_spark.llm import text as ltext
 
     docs = _t(spark, sf_dir, "documents")
-    tok = _lspread(docs, "doc_id").select(
+    tok = spread_scan(docs, "doc_id").select(
         F.explode(ltext.tokens(ascii_lower(F.col("text")))).alias("_tk"))
     return lsk.cm_heavy_hitters(
         tok, F.col("_tk"), min_count=500, depth=4, width=1024)
@@ -4523,8 +4490,6 @@ def q_bloom_prefilter(spark, sf_dir):
     # hashing at full width with no extra exchange (distinct reuses
     # the repartition's hash partitioning). Cast to string after the
     # dedup — bijective on longs, so the same probe set and schema.
-    from db_spark.llm.text import spread_scan
-
     probes = (
         spread_scan(li.select(F.col("l_orderkey").alias("_k")), "_k")
         .distinct()
@@ -6523,48 +6488,25 @@ def _driver_checked_rounds() -> dict[str, int]:
 # force them back into the 50-query window as if never checked. Clear
 # an entry once the next CORRECTNESS file carries its fresh row.
 _FORCE_RECHECK: frozenset[str] = frozenset({
-    # r13: every operator rewritten by the r12 optimization commits
-    # whose latest driver row predates the rewrite (the r12 verdict's
-    # directive #1). Local oracle sweeps pass at sf0.01 and sf0.1, but
-    # the driver is ground truth — force fresh rows for all of them.
-    # Plus the r13 rewrites themselves (same rule, one round earlier):
-    # array-form percentiles, the classifier/late-supplier/mjpeg
-    # restructures, the decontaminate kernel's broadcast lifecycle,
-    # and the ivfpq/pq representatives of the checkpoint-barrier
-    # conversion. 32 forced + 18 stalest slots still drain all but 4
-    # of the remaining r8-row backlog this round.
-    "exact_percentiles",
-    "winsorize",
-    "classifier_score",
-    "late_only_supplier",
-    "embedding_decontaminate",
-    "ivfpq_recall",
-    "ivfpq_topk",
-    "pq_sampled",
-    "bigram_surprisal",
-    "bm25_topk",
-    "collocations",
-    "curate_corpus",
-    "dedup_clusters",
-    "dedup_corpus",
-    "ivf_kmeans_topk",
-    "jaccard_grouped",
-    "jaccard_join",
-    "kcenter",
-    "lsh_probe",
-    "minhash_lsh_pairs",
-    "mjpeg_features",
-    "ngram_jaccard",
-    "semantic_dedup",
-    "simhash",
-    "simhash_grouped",
-    "simhash_near_dup",
-    "span_dedup",
-    "span_dup",
-    "winnow_cut",
-    "winnow_fingerprints",
-    "winnow_overlap",
-    "winnow_spans",
+    # The keys whose plans the last two r13 commits (in-array basket
+    # pairs, spread sketch/tokenizer scans) rewrote after their latest
+    # green CORRECTNESS row (r9-r11). Confirmed by building each key
+    # before and after those commits and diffing the optimized plans;
+    # hybrid_rrf rides along through bm25_topk's new scan spread. The
+    # r13 list cleared: every entry carries a green r13 row.
+    "copurchase_pairs",
+    "triangle_count",
+    "assoc_rules",
+    "stats_agg",
+    "bloom_prefilter",
+    "cm_join_size",
+    "cm_heavy_hitters",
+    "kmv_distinct",
+    "kmv_merge",
+    "hll_distinct",
+    "hll_merge",
+    "hll_set_ops",
+    "hybrid_rrf",
 })
 
 

@@ -18,6 +18,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from db_spark.execution import barrier
+
 
 def _epoch_seconds(c):
     """Whole seconds since epoch, timezone-free — works on TIMESTAMP
@@ -566,15 +568,13 @@ def association_rules(
     Returns (antecedent, consequent, pair_count, antecedent_count,
     consequent_count, support, confidence, lift) x top_k.
     """
-    from db_spark.llm.dedup import _plan_cache
-
     # one basket-keyed collect_set exchange replaces the old
     # distinct + basket-keyed self-join (r13, guide §2.3): the basket
-    # table is plan-cached and feeds all three consumers (the eager
+    # table sits behind a barrier and feeds all three consumers (the eager
     # basket count, per-item counts, in-array pair generation), and
     # pair enumeration stays quadratic only in basket size — now
     # inside one array transform instead of a join
-    basket_sets = _plan_cache(
+    basket_sets = barrier(
         baskets.select(F.col(basket_col).alias("_b"),
                        F.col(item_col).alias("_i"))
         .groupBy("_b").agg(F.collect_set("_i").alias("_is")))

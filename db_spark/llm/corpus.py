@@ -12,6 +12,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from db_spark.execution import spread_scan
 from db_spark.functions import ascii_lower
 
 from db_spark.llm.dedup import h32, shingle_table
@@ -313,8 +314,6 @@ def bm25_topk(
     # spread_scan (r13): the stats + postings passes each re-run the
     # tokenize at single-file scan parallelism otherwise — gated no-op
     # at scale.
-    from db_spark.llm.text import spread_scan
-
     base = stage_expr(spread_scan(df, id_col),
                       [F.col(id_col).alias("_did")], toks, "_toks")
 

@@ -18,6 +18,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from db_spark.execution import barrier, spread_scan
+from db_spark.execution import unpersist_plan_caches  # noqa: F401
 from db_spark.functions import ascii_lower
 
 # 31-bit Mersenne prime: (a*h + b) % P stays well inside 64-bit signed
@@ -34,140 +36,6 @@ KNUTH = 2_654_435_761
 #: from O(corpus^2) to O(corpus * cap).
 DEFAULT_MAX_SHINGLE_DF = 1000
 DEFAULT_MAX_BUCKET_SIZE = 1000
-
-#: Persisted intermediates reused inside LAZY returned plans (the
-#: grouping tables in simhash_pairs / jaccard_similarity_join) —
-#: checkpoint-backed since r13, see _plan_cache. The builder can't
-#: release them itself — the persisted table must outlive the caller's
-#: materialization of the returned DataFrame — so they register here
-#: and a long-lived session drops the references with
-#: unpersist_plan_caches() once results are consumed (ContextCleaner
-#: then reclaims the blocks on GC). Unreclaimed entries only ever cost
-#: storage, never correctness.
-_PLAN_CACHES: list[DataFrame] = []
-
-#: Registry cap: each builder call registers 1-4 caches (the k-means
-#: loops register one model-sized table per iteration), so 16 keeps the
-#: last few builder plans alive. Older entries were almost certainly
-#: materialized already; evicting them bounds the registry (and its
-#: pinned storage blocks) in a long-lived session where the caller
-#: never calls unpersist_plan_caches().
-_PLAN_CACHE_CAP = 16
-
-
-def _plan_cache(df: DataFrame) -> DataFrame:
-    """Persist a derived intermediate that several consumers re-read
-    AND truncate its logical plan to an RDD scan
-    (``localCheckpoint(eager=False)``, r13).
-
-    This was ``df.cache()`` through r12. The InMemoryRelation EMBEDS
-    the child plan, so under AQE every query stage that referenced a
-    cache re-analyzed and re-optimized the embedded plan and raced one
-    broadcast-collect job per consumer — on winnow_spans the waves of
-    32-task cache-rescan jobs dominated wall time (stage profile:
-    executorRunTime 3-4x executorCpuTime). The checkpoint makes every
-    reference a LogicalRDD leaf: planned once, scanned cheaply.
-    Measured on the same warm session (sf0.1, 3 reps): winnow_spans
-    4.91 -> 1.98 s, winnow_overlap 2.56 -> 0.83 s.
-
-    Two contracts change with the checkpoint and are deliberate:
-    - LogicalRDD carries no size statistics, so joins against the
-      persisted table plan as sort-merge INITIALLY; AQE re-plans them
-      to broadcast at runtime from the actual shuffle sizes (and
-      model-sized tables that must broadcast use explicit hints).
-    - Release is by DROPPING REFERENCES (ContextCleaner reclaims the
-      blocks once the RDD is garbage-collected), not by unpersist():
-      a materialized local checkpoint has no lineage to recompute
-      from, so explicitly unpersisting one would turn any later reuse
-      into a missing-block failure — reference-dropping keeps the old
-      registry's "never a correctness risk" property.
-    """
-    out = df.localCheckpoint(eager=False)
-    _PLAN_CACHES.append(out)
-    while len(_PLAN_CACHES) > _PLAN_CACHE_CAP:
-        _PLAN_CACHES.pop(0)
-    return out
-
-
-def _model_barrier(df: DataFrame) -> DataFrame:
-    """Persist a MODEL-SIZED derived table (centroids, codebooks —
-    n_cells / m x n_codes rows, never corpus-cardinality) AND truncate
-    its logical plan to an RDD scan via ``localCheckpoint(eager=False)``
-    (r13, guide §3.3 plan size / §5 localCheckpoint-to-cut-lineage).
-
-    Where ``_plan_cache`` only dedups execution (the InMemoryRelation
-    still EMBEDS the child plan, so k-means loops still composed
-    exponentially-growing LOGICAL plans — ivfpq_recall's audited plan
-    reached 1444 Exchange refs and planning itself became a cost),
-    the checkpoint makes every downstream reference a LogicalRDD leaf:
-    plans stay round-sized no matter how many rounds or consumers.
-
-    Lazy (eager=False): no job at builder time — the checkpoint
-    computes on first materialization and persists MEMORY_AND_DISK.
-    LogicalRDD has no size statistics, so every consumer must (and
-    does) use an explicit ``F.broadcast`` hint. Cleanup is by GC
-    (ContextCleaner), the accepted lifecycle for model-sized tables;
-    eviction pressure on the _PLAN_CACHES registry no longer affects
-    the loops at all (r13 ADVICE: the cap-overflow replay risk is
-    gone, not resized)."""
-    return df.localCheckpoint(eager=False)
-
-
-def unpersist_plan_caches() -> int:
-    """Release every plan-scoped persisted intermediate (and builder-
-    registered broadcast — see ``register_broadcast``) registered by
-    the dedup/similarity builders. Call after the DataFrames returned
-    by simhash_pairs / jaccard_similarity_join have been materialized
-    (collected/written); returns the number of registrations released.
-
-    Since the r13 checkpoint form, "release" means dropping the
-    registry's references — the blocks are reclaimed by Spark's
-    ContextCleaner once the checkpointed RDD is garbage-collected (an
-    explicit unpersist of a materialized local checkpoint would make
-    any still-live reuse fail with missing blocks; see _plan_cache)."""
-    n = len(_PLAN_CACHES)
-    _PLAN_CACHES.clear()
-    _unpersist_broadcasts()
-    return n
-
-
-#: Driver-side broadcasts created by builders (e.g. the eval-side
-#: matrix groups of embedding_decontaminate's GEMM kernel) — same
-#: lifecycle problem as _PLAN_CACHES: the broadcast must outlive the
-#: caller's materialization of the returned DataFrame, so builders
-#: register here and a long-lived session reclaims blocks with
-#: unpersist_plan_caches(). Capped like the plan caches; evicted
-#: entries are unpersisted non-blocking (executors re-fetch from the
-#: driver if a straggling task still needs the variable, so eviction
-#: is never a correctness risk — destroy() would be).
-_BROADCASTS: list = []
-_BROADCAST_CAP = 16
-
-
-def register_broadcast(bc):
-    """Track a builder-created Broadcast for lifecycle management (the
-    _PLAN_CACHES discipline applied to broadcast variables)."""
-    _BROADCASTS.append(bc)
-    while len(_BROADCASTS) > _BROADCAST_CAP:
-        old = _BROADCASTS.pop(0)
-        try:
-            old.unpersist(blocking=False)
-        except Exception:  # noqa: BLE001 - session may already be stopped
-            pass
-    return bc
-
-
-def _unpersist_broadcasts() -> int:
-    n = 0
-    while _BROADCASTS:
-        bc = _BROADCASTS.pop()
-        try:
-            bc.unpersist(blocking=False)
-            n += 1
-        except Exception:  # noqa: BLE001 - session may already be stopped
-            pass
-    return n
-
 
 def perm_constants(k: int) -> list[tuple[int, int]]:
     """Deterministic (a, b) constants for k min-hash permutations."""
@@ -233,7 +101,7 @@ def shingle_table(
     re-tokenizing the text once per gram element (n x per gram; seen in
     the r12 plan audit). The Generate barrier makes the regex run
     exactly once per document."""
-    from db_spark.llm.text import _grams_of, spread_scan, stage_expr
+    from db_spark.llm.text import _grams_of, stage_expr
 
     toks = F.regexp_extract_all(
         ascii_lower(F.col(text_col)), F.lit(r"[a-z']+"), 0)
@@ -290,7 +158,7 @@ def ngram_jaccard_pairs(
             raise ValueError("output='grouped' requires group_identical=True")
         sh = shingle_table(df, id_col, text_col, n, max_shingle_df)
         return _inverted_index_jaccard(sh, threshold)
-    sh = _plan_cache(shingle_table(df, id_col, text_col, n, max_shingle_df))
+    sh = barrier(shingle_table(df, id_col, text_col, n, max_shingle_df))
 
     # ---- identical-set grouping (guarded-set space; docs with zero
     # guarded shingles never enter sh, so they can't pair — unchanged)
@@ -298,12 +166,12 @@ def ngram_jaccard_pairs(
         F.sha2(F.concat_ws("\x1f", F.array_sort(F.collect_list("shingle"))),
                256).alias("_fp"))
     reps = fp.groupBy("_fp").agg(F.min("_sid").alias("_rep"))
-    members = _plan_cache(fp.join(reps, "_fp").select("_fp", "_sid", "_rep"))
+    members = barrier(fp.join(reps, "_fp").select("_fp", "_sid", "_rep"))
 
-    # plan-cache the representative shingle table: its consumers
+    # barrier the representative shingle table: its consumers
     # (sizes, both join sides) each re-ran the fingerprint aggregate +
     # semi-join subtree uncached (guide §2.4 shared-exchange rule)
-    sh_rep = _plan_cache(
+    sh_rep = barrier(
         sh.join(reps.select(F.col("_rep").alias("_sid")), "_sid", "semi"))
     rep_pairs = _inverted_index_jaccard(sh_rep, threshold)
 
@@ -461,17 +329,17 @@ def minhash_dedup_pairs(
     bucket's size is the member count — the sum of group sizes over
     the distinct sets holding that band key — not the rep count, so
     precisely the same buckets are skipped as before."""
-    sh = _plan_cache(shingle_table(df, id_col, text_col, n,
+    sh = barrier(shingle_table(df, id_col, text_col, n,
                                    max_shingle_df))
     fp = sh.groupBy("_sid").agg(
         F.sha2(F.concat_ws("\x1f", F.array_sort(F.collect_list("shingle"))),
                256).alias("_fp"))
     reps = fp.groupBy("_fp").agg(F.min("_sid").alias("_rep"))
-    members = _plan_cache(fp.join(reps, "_fp").select("_sid", "_rep"))
+    members = barrier(fp.join(reps, "_fp").select("_sid", "_rep"))
     gsz = members.groupBy("_rep").agg(F.count(F.lit(1)).alias("_gsz"))
     sh_rep = sh.join(reps.select(F.col("_rep").alias("_sid")), "_sid",
                      "semi")
-    sig = _plan_cache(_signature_from_shingles(sh_rep, id_col, k))
+    sig = barrier(_signature_from_shingles(sh_rep, id_col, k))
 
     exploded = _banded_rows(sig, id_col, k, bands)
     if max_bucket_size is not None:
@@ -482,7 +350,7 @@ def minhash_dedup_pairs(
         exploded = exploded.join(
             sizes.filter(F.col("_bn") <= max_bucket_size).drop("_bn"),
             ["band_id", "band_key"])
-    exploded = _plan_cache(exploded)
+    exploded = barrier(exploded)
     a = exploded.select(F.col("_bid").alias("id_a"), "band_id", "band_key")
     b = exploded.select(F.col("_bid").alias("id_b"), "band_id", "band_key")
     cand = (
@@ -613,15 +481,13 @@ def simhash_pairs(
     seg_n = max_hamming + 1
     seg_bits = bits // seg_n
     # NULL signatures (token-less docs) carry no signal — see simhash()
-    from db_spark.llm.text import spread_scan
-
     sh = spread_scan(df).select(
         F.col(id_col).alias("_hid"),
         simhash(F.col(text_col), bits).alias("sh")) \
         .filter(F.col("sh").isNotNull())
 
     reps = sh.groupBy("sh").agg(F.min("_hid").alias("_rep"))
-    members = _plan_cache(sh.join(reps, "sh"))
+    members = barrier(sh.join(reps, "sh"))
 
     rep_sh = members.filter(F.col("_hid") == F.col("_rep"))
     segs = rep_sh.select(
@@ -730,7 +596,7 @@ def span_dup_stats(
     Returns (id, n_windows, n_dup_windows, n_dup_distinct, first_dup_pos,
     dup_frac) for documents containing at least one window that appears
     in >= ``min_df`` distinct documents."""
-    from db_spark.llm.text import _grams_of, spread_scan, stage_expr
+    from db_spark.llm.text import _grams_of, stage_expr
 
     toks = F.regexp_extract_all(
         ascii_lower(F.col(text_col)), F.lit(r"[a-z']+"), 0)
@@ -792,7 +658,7 @@ def remove_dup_spans(
 
     Returns (id, n_tokens_before, n_tokens_removed, clean_text) for
     documents that changed."""
-    from db_spark.llm.text import _grams_of, spread_scan, stage_expr
+    from db_spark.llm.text import _grams_of, stage_expr
 
     toks = F.regexp_extract_all(
         ascii_lower(F.col(text_col)), F.lit(r"[a-z']+"), 0)
@@ -1156,18 +1022,18 @@ def jaccard_similarity_join(
     # information the gram array already had before the explode. The
     # fingerprint is bit-identical: sha2 over the sorted array equals
     # sha2 over array_sort(collect_list(exploded elements)).
-    arrs = _plan_cache(_shingle_sets(df, id_col, text_col, n))
+    arrs = barrier(_shingle_sets(df, id_col, text_col, n))
 
     # ---- identical-set grouping --------------------------------------
     # (docs with zero shingles never enter arrs, so they can't group)
     reps = arrs.groupBy("_fp").agg(F.min("_jid").alias("_rep"))
-    members = _plan_cache(
+    members = barrier(
         arrs.select("_fp", "_jid").join(reps, "_fp")
         .select("_fp", "_jid", "_rep"))
 
-    # plan-cache the representative set table: _ppjoin_pairs reads it
+    # barrier the representative set table: _ppjoin_pairs reads it
     # three ways (freq explode, ranked prefix, verify arrays)
-    arr_rep = _plan_cache(
+    arr_rep = barrier(
         arrs.join(reps.select(F.col("_rep").alias("_jid")), "_jid", "semi"))
     rep_pairs = _ppjoin_pairs(arr_rep, threshold, t_ppm)
 
@@ -1229,7 +1095,7 @@ def _shingle_sets(
     CollapseProject would otherwise inline the tokenizer regex into
     every gram lambda element and the gram transform into each of its
     three downstream references (set / size / fingerprint)."""
-    from db_spark.llm.text import _grams_of, spread_scan, stage_expr
+    from db_spark.llm.text import _grams_of, stage_expr
 
     toks = F.regexp_extract_all(
         ascii_lower(F.col(text_col)), F.lit(r"[a-z']+"), 0)
@@ -1619,14 +1485,14 @@ def remove_char_spans(
                 F.sum("_nf").over(
                     ow.rowsBetween(Window.unboundedPreceding, 0))
                 .alias("_g")))
-    # plan-cache the merged intervals: FOUR consumers follow (gaps,
+    # barrier the merged intervals: FOUR consumers follow (gaps,
     # tails, stats, and pieces via gaps∪tails) and ``spans`` is often an
     # expensive subplan (winnow_cut feeds the whole span-alignment
     # pipeline in here) — uncached, every consumer re-executes it from
     # scratch (measured 4x the spans pipeline, ~52 s of the sf1
     # winnow_cut noop run; cached, the subplan runs once). Merged rows
     # are span-cardinality — narrow and small.
-    merged = _plan_cache(
+    merged = barrier(
         isl.groupBy("_rid", "_g")
         .agg(F.min("_s").alias("_s"), F.max("_e").alias("_e"))
         .join(docs.select("_rid", "_len"), "_rid")
@@ -1792,7 +1658,7 @@ def winnow_overlap(
     the token regex (separator pieces) interleaved with the tokens by
     position key and a single running-sum window pass at token
     cardinality; spans then look their four endpoints up against the
-    plan-cached map. Cost on top of stats mode: the anchor join
+    barriered map. Cost on top of stats mode: the anchor join
     carries positions (occurrence-, not distinct-, cardinality), the
     passage merge is one window pass partitioned by (pair, diagonal),
     and the char lookups are four joins of span-cardinality rows
@@ -1820,7 +1686,7 @@ def winnow_overlap(
     # alone. The df-cap stays exact: a fingerprint's document
     # frequency is the SUM OF GROUP SIZES over the distinct texts
     # holding it, not the rep count.
-    mem = _plan_cache(
+    mem = barrier(
         df.select(F.col(id_col).alias("_mid"),
                   F.sha2(F.col(text_col), 256).alias("_tk"))
         .select("_mid",
@@ -1832,8 +1698,8 @@ def winnow_overlap(
         .select(F.col("_mid").alias(id_col)), id_col, "semi")
     # The fingerprint table feeds FOUR consumers (df-cap, per-doc
     # counts, both self-join sides); uncached, each re-derives the
-    # full gram-hash pass from the scan — cache it once (the module's
-    # plan-cache lifecycle; ~2/(w+1) of gram cardinality, narrow rows).
+    # full gram-hash pass from the scan — persist it once behind a
+    # barrier (~2/(w+1) of gram cardinality, narrow rows).
     if output == "spans":
         # hits carry their gram's codepoint span (char_offsets=True,
         # r13): char endpoints then fall out of the SAME min/max
@@ -1841,7 +1707,7 @@ def winnow_overlap(
         # passage-merge comment below — and the whole offset-map
         # machinery (a second full regex pass + a melt-join at span
         # cardinality) disappears.
-        hits = _plan_cache(
+        hits = barrier(
             winnow_fingerprints(reps, id_col, text_col, k, w,
                                 output="hits", char_offsets=True)
             .select(F.col(id_col).alias("_fid"), "fingerprint", "pos",
@@ -1849,7 +1715,7 @@ def winnow_overlap(
         fp = hits.select("_fid", "fingerprint").distinct()
     else:
         hits = None
-        fp = _plan_cache(
+        fp = barrier(
             winnow_fingerprints(reps, id_col, text_col, k, w,
                                 output="fps")
             .select(F.col(id_col).alias("_fid"), "fingerprint"))
@@ -2111,10 +1977,10 @@ def winnow_probe(
         meta = json.load(fh)
     k, w = int(meta["k"]), int(meta["w"])
     stored_id = meta.get("id_col", "doc_id")
-    idx = _plan_cache(spark.read.parquet(path + "/hits").select(
+    idx = barrier(spark.read.parquet(path + "/hits").select(
         F.col(stored_id).alias("_cid"), "fingerprint",
         F.col("pos").alias("_pa")))
-    new_hits = _plan_cache(
+    new_hits = barrier(
         winnow_fingerprints(new_docs, id_col, text_col, k, w,
                             output="hits")
         .select(F.col(id_col).alias("_nid"), "fingerprint",

@@ -29,6 +29,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from db_spark.execution import barrier
 from db_spark.llm import corpus as _corpus
 from db_spark.llm import dedup as _dedup
 from db_spark.llm import text as _text
@@ -69,9 +70,8 @@ def curate(
         # anti-join AND the dedup signature pass — uncached, each
         # consumer re-ran the regex-heavy normalize + quality chain
         # over the full corpus (the curate_v2 stage-boundary doctrine,
-        # done lazily with the module's plan-cache lifecycle since
-        # this plan stays small enough to not need lineage truncation).
-        out = _dedup._plan_cache(out)
+        # done lazily behind a barrier).
+        out = barrier(out)
     if eval_df is not None:
         ev = eval_df
         if normalize:

@@ -15,7 +15,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from db_spark.llm.dedup import _model_barrier, _plan_cache, h32
+from db_spark.execution import barrier, register_broadcast
+from db_spark.llm.dedup import h32
 
 #: semantic_dedup only routes a cell through the per-cell GEMM verify
 #: kernel when its EXPECTED size (n / n_cells) is at or under this cap
@@ -187,10 +188,9 @@ def ivf_kmeans_centroids(
     # (cent_i references cent_{i-1} in both the assignment and the
     # update join), so every downstream consumer — semantic_dedup's
     # three v-references, the ivf_topk refine path — replayed the full
-    # chain per reference (r12 cache; r13 _model_barrier so the
-    # LOGICAL plan is cut too, not just the execution — see the
-    # helper's docstring)
-    cent = _model_barrier(
+    # chain per reference (r12 cache; r13 barrier so the LOGICAL
+    # plan is cut too, not just the execution — see its docstring)
+    cent = barrier(
         src.orderBy(F.col(id_col)).limit(n_cells)
         .select(F.col(id_col).alias("cell_id"), _dbl(F.col(vec_col)).alias("_cvec"))
     )
@@ -215,7 +215,7 @@ def ivf_kmeans_centroids(
                 "cell_id",
                 F.transform(F.col("_jm"), lambda s: s.getField("_m")).alias("_new"))
         )
-        cent = _model_barrier(
+        cent = barrier(
             # new_cent is <= n_cells rows but sits above an aggregate, so
             # Catalyst has no size estimate and would sort-merge; broadcast
             cent.join(F.broadcast(new_cent), "cell_id", "left")
@@ -586,7 +586,6 @@ def embedding_near_dup_pairs(
         id_type, (ByteType, ShortType, IntegerType, LongType))
     if fast:
         from pyspark.sql import Window
-        from db_spark.llm.dedup import _plan_cache
 
         # Identical-vector grouping (r12 — the jaccard identical-SET
         # grouping discipline applied to embeddings): real corpora are
@@ -610,7 +609,7 @@ def embedding_near_dup_pairs(
         # normal vectors, excluded for zero/NULL/NaN vectors exactly
         # like the kernel path (zero den -> 0.0; NULL/NaN never pass a
         # positive threshold).
-        mem = _plan_cache(
+        mem = barrier(
             corpus.select(F.col(id_col), _dbl(F.col(vec_col)).alias("_vd"))
             .select(
                 id_col, "_vd",
@@ -989,11 +988,10 @@ def _k_center_batched(
     seed = st.agg(F.min("_id")).collect()[0][0]
     seed_vec = st.filter(F.col("_id") == seed).select("_v").collect()[0][0]
     picks = [(1, int(seed), None)]
-    # eager=False: the checkpoint materializes inside the next round's
+    # lazy barrier: the checkpoint materializes inside the next round's
     # frontier job, truncating lineage without spending a job of its own
-    st = (st.filter(F.col("_id") != seed)
-          .withColumn("_mind", _kc_dist_expr(seed_vec))
-          .localCheckpoint(eager=False))
+    st = barrier(st.filter(F.col("_id") != seed)
+                 .withColumn("_mind", _kc_dist_expr(seed_vec)))
     # fetch deeper than m so exact-duplicate vectors (the norm in a
     # dedup-bound corpus) don't starve the batch: a twin (identical
     # vector, larger id) can never be sub-picked while its min-id
@@ -1079,9 +1077,9 @@ def _k_center_batched(
                     score[i] = d
         if len(picks) < k:
             folds = [_kc_dist_expr(vecs[c]) for c in accepted]
-            st = (st.filter(~F.col("_id").isin(accepted))
-                  .withColumn("_mind", F.least(F.col("_mind"), *folds))
-                  .localCheckpoint(eager=False))
+            st = barrier(st.filter(~F.col("_id").isin(accepted))
+                         .withColumn("_mind",
+                                     F.least(F.col("_mind"), *folds)))
     return spark.createDataFrame(
         picks, "sel_rank int, " + id_col + " long, min_dist double")
 
@@ -1313,7 +1311,7 @@ def semantic_dedup(
     # .cache() inserts an InMemoryTableScan boundary that breaks
     # whole-stage codegen across the join. Measured A/B (r10, sf0.1,
     # 3 reps): cached 0.36-0.64 s vs uncached 0.13-0.21 s; sf1 neutral
-    # (0.34 s both). The dedup builders' plan-cache discipline applies
+    # (0.34 s both). The dedup builders' barrier discipline applies
     # to EXPENSIVE re-derivations (tokenizer regex passes), not to
     # exchange-reused relational chains.
     a = v.select(F.col(id_col).alias("_ida"), "cell_id",
@@ -1389,9 +1387,9 @@ def _pq_kmeans(comp: DataFrame, seeds: DataFrame, n_iter: int) -> DataFrame:
     value. Shared by ``pq_train`` (raw components) and ``ivfpq_train``
     (residual components) — identical arithmetic, so both replay 1:1
     in the HUGEINT oracle chain. Returns (_j, _code, _pos, _c)."""
-    # Each round's codebook is plan-cached (model-sized: dim x n_codes
-    # rows). Without the cache the lineage grows EXPONENTIALLY — cent_i
-    # references cent_{i-1} twice (assignment + update join) and comp
+    # Each round's codebook sits behind a barrier (model-sized:
+    # dim x n_codes rows). Without it the lineage grows EXPONENTIALLY —
+    # cent_i references cent_{i-1} twice (assignment + update join) and comp
     # twice per round — so every downstream reference (codes, ADC
     # tables) replayed the whole k-means chain and the composed plans
     # (ivfpq_recall) spent tens of seconds in planning + recompute
@@ -1399,7 +1397,7 @@ def _pq_kmeans(comp: DataFrame, seeds: DataFrame, n_iter: int) -> DataFrame:
     # noop: ivfpq_recall 36.2 s -> ~2 s, ivfpq_topk 6.2 s -> ~1.5 s).
     # Caching truncates each round to: one assignment pass over comp +
     # one model-sized update, the inherent Lloyd cost.
-    cent = _model_barrier(
+    cent = barrier(
         comp.join(F.broadcast(seeds), "_vid")
         .select("_j", "_code", "_pos", F.col("_x").alias("_c")))
     for _ in range(n_iter):
@@ -1409,7 +1407,7 @@ def _pq_kmeans(comp: DataFrame, seeds: DataFrame, n_iter: int) -> DataFrame:
             .groupBy("_j", "_code", "_pos")
             .agg(F.expr("SUM(CAST(_x AS DECIMAL(38,0))) div COUNT(*)")
                  .cast("long").alias("_new")))
-        cent = _model_barrier(
+        cent = barrier(
             # means is dim x n_codes rows (model-sized) but sits above
             # an aggregate, so Catalyst has no size estimate and would
             # sort-merge every update round (the ivf_kmeans_centroids
@@ -1486,7 +1484,7 @@ def pq_train(
                      F.col(id_col))
             .limit(int(train_sample_n)))
         src = corpus.join(F.broadcast(pick), id_col, "left_semi")
-    comp = _plan_cache(
+    comp = barrier(
         _pq_components(src, m, id_col, vec_col, scale, clamp, "_vid"))
     seeds = (
         src.select(F.col(id_col).alias("_vid")).orderBy("_vid")
@@ -1542,7 +1540,7 @@ def pq_topk(
     brute_force_topk contract); one (query, id) aggregate sums the m
     lookups; TakeOrdered finishes. Returns (query_id, vec_id,
     adc_dist DOUBLE, rank)."""
-    cb = _plan_cache(pq_train(
+    cb = barrier(pq_train(
         corpus, m, n_codes, n_iter, id_col, vec_col, scale, clamp,
         train_sample_n))
     codes = pq_encode(corpus, cb, m, id_col, vec_col, scale, clamp)
@@ -1591,7 +1589,7 @@ def pq_index_build(
     sound because `_pq_components` enforces dim % m == 0, and a stored
     parameter survives even if that invariant ever changes (r11
     ADVICE)."""
-    cb = _plan_cache(pq_train(
+    cb = barrier(pq_train(
         corpus, m, n_codes, n_iter, id_col, vec_col, scale, clamp,
         train_sample_n))
     cb.write.mode("overwrite").parquet(path + "/codebooks")
@@ -1775,8 +1773,6 @@ def embedding_decontaminate(
         # the driver to become the broadcast matrix). The broadcast is
         # registered for cleanup so long-lived sessions reclaim its
         # blocks with unpersist_plan_caches() (r13 ADVICE).
-        from db_spark.llm.dedup import register_broadcast
-
         bc = register_broadcast(
             train.sparkSession.sparkContext.broadcast(groups))
         margin = 1e-5
@@ -1957,18 +1953,18 @@ def _ivfpq_parts(
     # each feed 2-3 consumers (ccomp + probes + seed anti-join; rcomp +
     # codes) — persist both so the corpus scan + argmax pass runs
     # once, not per consumer (r12, guide §2.4). centroids is
-    # model-sized, so it gets the plan-truncating barrier (r13);
-    # cells is corpus-cardinality and stays a plain plan cache.
-    centroids = _model_barrier(centroids)
-    cells = _plan_cache(assigned.select(F.col(id_col).alias("_vid"),
-                                        "cell_id"))
+    # model-sized; cells is corpus-cardinality. Both go behind a
+    # barrier (r13).
+    centroids = barrier(centroids)
+    cells = barrier(assigned.select(F.col(id_col).alias("_vid"),
+                                    "cell_id"))
     comp = _pq_components(corpus, m, id_col, vec_col, scale, clamp, "_vid")
     ccomp = (
         _pq_components(
             centroids.select("cell_id", F.col("_cvec").alias(vec_col)),
             m, "cell_id", vec_col, scale, clamp, "cell_id")
         .select("cell_id", "_j", "_pos", F.col("_x").alias("_cx")))
-    rcomp = _plan_cache(
+    rcomp = barrier(
         comp.join(cells, "_vid")
         .join(F.broadcast(ccomp), ["cell_id", "_j", "_pos"])
         .select("_vid", "cell_id", "_j", "_pos",

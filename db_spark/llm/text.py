@@ -11,6 +11,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from db_spark.execution import spread_scan
 from db_spark.functions import ascii_lower
 
 # Tiny per-language stopword lists for the n-gram/stopword language-ID
@@ -34,55 +35,6 @@ _BPE_RE = r"[a-zA-Z]+|[0-9]+|[^a-zA-Z0-9 \t\n\x0B\f\r]"
 def tokens(text: Column) -> Column:
     """Whitespace-free word extraction (robust to repeated separators)."""
     return F.regexp_extract_all(text, F.lit(_WORD_RE), 0)
-
-
-def spread_scan(df: DataFrame, *cols) -> DataFrame:
-    """Spread a SMALL file scan across every core before CPU-heavy
-    per-row work (tokenizer regexes, gram hashing) — the mjpeg
-    `_spread` idiom generalized (r13, guide §2.6/§8): the testdata
-    tables are single-row-group files, so a regex-heavy map stage
-    otherwise runs on 1-2 tasks of a 32-core executor, and AQE cannot
-    help (there is no exchange to re-plan below the scan). Gated so it
-    is a NO-OP at scale: only fires when the scan has fewer files than
-    defaultParallelism (a real corpus has more splits than cores —
-    repartitioning there would only add an exchange), and only on
-    plans whose input files are knowable (inputFiles() is best-effort
-    and returns [] on non-scan plans — treated as unknown, left
-    alone). Round-robin repartition is retry-safe (sort-before-
-    repartition is on by default) and the downstream per-row work is
-    partition-independent. Measured A/B (sf0.1, same load): span_dup
-    5.6 -> 1.9 s, classifier_score 2.4 -> 1.6 s, simhash grouped
-    11.8 -> 6.7 s."""
-    sc = df.sparkSession.sparkContext
-    par = sc.defaultParallelism
-    try:
-        files = df.inputFiles()
-    except Exception:  # noqa: BLE001 - exotic plans; spreading is optional
-        return df
-    if not (0 < len(files) < par):
-        return df
-    try:
-        # skip plans that already pass through an exchange below this
-        # point (r13): an upstream aggregate / join / distinct / window /
-        # repartition means the rows arrive at shuffle-partition
-        # parallelism already, and respreading would only add an
-        # exchange (seen when a sketch builder is fed a post-distinct
-        # key table, or a spread scan feeds a second spread call site)
-        plan = df._jdf.queryExecution().analyzed().toString()
-        if any(k in plan for k in (
-                "Repartition", "Aggregate", "Join", "Window",
-                "Deduplicate", "Sort")):
-            return df
-    except Exception:  # noqa: BLE001 - plan introspection is best-effort
-        pass
-    if cols:
-        # hash-repartition on deterministic caller-chosen columns: skips
-        # round-robin's sort-before-repartition pass (~2x cheaper on a
-        # 600k-row spread, measured) and is retry-safe by construction.
-        # Callers pick columns with far more distinct values than cores
-        # (join keys, tokens) so the hash spreads evenly (guide §2.5).
-        return df.repartition(par, *cols)
-    return df.repartition(par)
 
 
 def stage_expr(df: DataFrame, keep: list, expr: Column, alias: str) -> DataFrame:

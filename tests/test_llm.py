@@ -3,6 +3,7 @@
 import pytest
 from pyspark.sql import functions as F
 
+from db_spark.execution import register_broadcast
 from db_spark.llm import dedup, similarity, text, multimodal
 
 
@@ -548,19 +549,33 @@ def test_simhash_grouped_encodes_pair_expansion(spark):
         dedup.simhash_pairs(df, output="nonsense")
 
 
-def test_unpersist_plan_caches(spark):
-    """The grouping builders register their plan-scoped caches; the
-    helper releases them all and is idempotent."""
-    df = spark.createDataFrame(
-        [(1, "the quick brown fox jumps over the lazy dog")] * 3
-        + [(2, "a completely different document about spark plans")],
-        "doc_id long, text string")
+def test_barriered_builders_survive_release_and_gc(spark, docs):
+    """The grouping builders' barrier tables live exactly as long as the
+    returned DataFrame: with unpersist_plan_caches() called and Python
+    and JVM GC forced before the first action, the plans still hold
+    their checkpointed RDDs, and a second collect re-reads the blocks
+    the first one persisted."""
+    import gc
+
+    sim = dedup.simhash_pairs(docs)
+    jac = dedup.jaccard_similarity_join(docs, 0.5)
+    dedup.unpersist_plan_caches()
+    gc.collect()
+    spark.sparkContext._jvm.java.lang.System.gc()
+    for _ in range(2):
+        assert sorted(map(tuple, sim.collect())) == [(1, 4, 0)]
+        assert sorted(map(tuple, jac.collect())) == [
+            (1, 2, 0.75), (1, 4, 1.0), (2, 4, 0.75)]
+
+
+def test_unpersist_plan_caches_releases_broadcasts(spark):
+    """unpersist_plan_caches releases builder-registered broadcasts,
+    reports how many, and is idempotent."""
     dedup.unpersist_plan_caches()  # drop leftovers from other tests
-    dedup.simhash_pairs(df).count()
-    dedup.jaccard_similarity_join(df, 0.5).count()
-    # simhash members + jaccard sh + members + sh_rep (the r12 PPJoin
-    # verify caches the representative shingle table too)
-    assert dedup.unpersist_plan_caches() == 4
+    sc = spark.sparkContext
+    register_broadcast(sc.broadcast([1, 2]))
+    register_broadcast(sc.broadcast([3]))
+    assert dedup.unpersist_plan_caches() == 2
     assert dedup.unpersist_plan_caches() == 0
 
 
@@ -2612,9 +2627,9 @@ def test_winnow_probe_never_rereads_corpus_text(spark, tmp_path,
     """The probe's whole point at 100 TB: corpus text is read ONCE at
     index build. The probe's only parquet scans are the stored
     (doc_id, fingerprint, pos) hits — no ReadSchema ever contains a
-    corpus text column, and the hits table is in the plan. Since the
-    r13 checkpoint-backed _plan_cache, the shipped probe plan shows
-    LogicalRDD leaves instead of its scans, so the scan-source
+    corpus text column, and the hits table is in the plan. Behind
+    execution.barrier, the shipped probe plan shows LogicalRDD leaves
+    instead of its scans, so the scan-source
     assertions run on the identity-patched (un-barriered) plan — the
     same logical computation with its true data sources visible."""
     import re as _re
@@ -2623,7 +2638,7 @@ def test_winnow_probe_never_rereads_corpus_text(spark, tmp_path,
     idx = str(tmp_path / "widx2")
     dedup.winnow_index_build(corpus, idx, k=4, w=4)
     with monkeypatch.context() as m:
-        m.setattr(dedup, "_plan_cache", lambda df: df)
+        m.setattr(dedup, "barrier", lambda df: df)
         bare = dedup.winnow_probe(spark, idx, new, min_shared=2,
                                   output="spans")
         plan = bare._sc._jvm.PythonSQLUtils.explainString(

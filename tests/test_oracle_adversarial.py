@@ -660,3 +660,43 @@ def test_full_registry_dirty_dir(spark, dirty_dir, key, ansi_mode):
 def test_events_tier_dirty_events(spark, dirty_dir, key, ansi_mode):
     _skip_other_ansi_mode(key, ansi_mode)
     _assert_engines_agree(spark, dirty_dir, key)
+
+
+def _plan_node_names(plan):
+    """Class names of every physical node, descending through AQE's
+    current plan and into each query stage."""
+    name = plan.getClass().getSimpleName()
+    if name == "AdaptiveSparkPlanExec":
+        kids = [plan.executedPlan()]
+    elif name.endswith("QueryStageExec"):
+        kids = [plan.plan()]
+    else:
+        ch = plan.children()
+        kids = [ch.apply(i) for i in range(ch.size())]
+    return [name] + [n for k in kids for n in _plan_node_names(k)]
+
+
+def test_codegen_canary(spark, sf_dir):
+    """The test session runs with codegen off (conftest); get_spark's
+    default sessions, check_oracle and the benchmark run with it on.
+    This canary keeps a codegen'd path in tier-1: a relational
+    aggregate and a dedup join that runs through spread_scan and
+    barrier agree with DuckDB under whole-stage codegen with
+    interpreted fallback."""
+    keys = ("spark.sql.codegen.wholeStage", "spark.sql.codegen.factoryMode")
+    saved = {k: spark.conf.get(k, None) for k in keys}
+    try:
+        spark.conf.set("spark.sql.codegen.wholeStage", "true")
+        spark.conf.set("spark.sql.codegen.factoryMode", "FALLBACK")
+        df = entry_mod.queries()["pricing_summary"](spark, sf_dir)
+        df.collect()
+        assert "WholeStageCodegenExec" in _plan_node_names(
+            df._jdf.queryExecution().executedPlan())
+        for key in ("pricing_summary", "jaccard_join"):
+            _assert_engines_agree(spark, sf_dir, key)
+    finally:
+        for k, v in saved.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
